@@ -30,20 +30,24 @@ object PumpDemo {
     b.publish(topics.head, "not json".getBytes(StandardCharsets.UTF_8), 1704067200000000L)
 
     val out = java.nio.file.Files.createTempDirectory("pump-demo").toString
-    val sinks = Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
-    Pump.start(spark, cfg, sinks, brokerName, Trigger.AvailableNow()).awaitTermination(120000)
-    MonitorStream.start(spark, cfg, brokerName, s"$out/mon-ckpt", Trigger.AvailableNow())
-      .awaitTermination(120000)
+    try {
+      val sinks = Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
+      Pump.start(spark, cfg, sinks, brokerName, Trigger.AvailableNow()).awaitTermination(120000)
+      MonitorStream.start(spark, cfg, brokerName, s"$out/mon-ckpt", Trigger.AvailableNow())
+        .awaitTermination(120000)
 
-    val raw = spark.read.parquet(sinks.rawPath)
-    val adapter = spark.read.parquet(sinks.adapterPath)
-    println(s"RAW_ROWS=${raw.count()} ADAPTER_ROWS=${adapter.count()}")
-    println("RAW_PARTITIONS=" + raw.select("collect_date").distinct().count())
-    val monTopics = b.topics.filter(_.startsWith(cfg.monitor.topicRoot)).sorted
-    println("MON_TOPICS=" + monTopics.mkString(","))
-    monTopics.headOption.foreach { t =>
-      println("DOC=" + new String(b.read(t, 0, 1).head.payload, StandardCharsets.UTF_8))
+      val raw = spark.read.parquet(sinks.rawPath)
+      val adapter = spark.read.parquet(sinks.adapterPath)
+      println(s"RAW_ROWS=${raw.count()} ADAPTER_ROWS=${adapter.count()}")
+      println("RAW_PARTITIONS=" + raw.select("collect_date").distinct().count())
+      val monTopics = b.topics.filter(_.startsWith(cfg.monitor.topicRoot)).sorted
+      println("MON_TOPICS=" + monTopics.mkString(","))
+      monTopics.headOption.foreach { t =>
+        println("DOC=" + new String(b.read(t, 0, 1).head.payload, StandardCharsets.UTF_8))
+      }
+    } finally {
+      spark.stop()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
     }
-    spark.stop()
   }
 }

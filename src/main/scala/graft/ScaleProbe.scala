@@ -1,12 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.engine.{PumpConfig, PumpQueries, Tables}
-import graft.streaming.Pump
+import graft.engine.Tables
 
-/** 10x scale probe: unions sf0.1 events to ~1M rows and drives the pump
-  * pipeline + heaviest aggregates, watching for nonlinear cliffs. Not part
-  * of the driver gates; a dev tool for the 100 TB design story.
+/** 10x scale probe: unions sf0.1 events to ~1M rows and drives the
+  * heaviest aggregates, watching for nonlinear cliffs (the pump itself is
+  * measured as a stream by `perfbench/`). Not part of the driver gates; a
+  * dev tool for the 100 TB design story.
   */
 object ScaleProbe {
   def t[A](name: String)(f: => A): A = {
@@ -28,19 +28,6 @@ object ScaleProbe {
     }.reduce(_ union _)
     println("ROWS=" + t("materialize-count")(ev10.count()))
 
-    val good = PumpQueries.goodPayload(col("props"))
-    val source = ev10.select(
-      concat(lit("pump/data/"), (col("user_id") % 5).cast("string")).as("topic"),
-      good.cast("binary").as("payload"),
-      col("ts").as("received_time"))
-    val out = java.nio.file.Files.createTempDirectory("scaleprobe").toString
-    val sinks = Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
-    t("pump-1M-dual-sink") {
-      Pump.writeBatch(PumpConfig(jsonSample = PumpQueries.payloadSample),
-        PumpQueries.payloadInf, sinks)(source, 0L)
-    }
-    println("RAW=" + spark.read.parquet(sinks.rawPath).count()
-      + " ADAPTER=" + spark.read.parquet(sinks.adapterPath).count())
     t("g1-window-1M") {
       graft.engine.Monitor.windowedStageAgg(ev10, col("ts"), col("event_type"),
         length(col("props")) + lit(4), "5 minutes")

@@ -128,15 +128,20 @@ object PumpQueries {
         payload.cast("binary").as("payload"),
         col("ts").as("received_time"))
       val out = java.nio.file.Files.createTempDirectory("dual-sink").toString
-      val sinks = graft.streaming.Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
-      graft.streaming.Pump.writeBatch(PumpConfig(jsonSample = payloadSample),
-        payloadInf, sinks)(source, 0L)
-      val raw = s.read.parquet(sinks.rawPath)
-      val adapter = s.read.parquet(sinks.adapterPath)
-      raw.agg(count(lit(1)).as("raw_rows"),
-          countDistinct(col("mid")).as("n_mids"))
-        .crossJoin(adapter.agg(count(lit(1)).as("adapter_rows")))
-        .select(col("raw_rows"), col("n_mids"), col("adapter_rows"))
+      try {
+        val sinks = graft.streaming.Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
+        graft.streaming.Pump.writeBatch(PumpConfig(jsonSample = payloadSample),
+          payloadInf, sinks)(source, 0L)
+        val raw = s.read.parquet(sinks.rawPath)
+        val adapter = s.read.parquet(sinks.adapterPath)
+        val totals = raw.agg(count(lit(1)).as("raw_rows"),
+            countDistinct(col("mid")).as("n_mids"))
+          .crossJoin(adapter.agg(count(lit(1)).as("adapter_rows")))
+          .select(col("raw_rows"), col("n_mids"), col("adapter_rows"))
+        // the frame reads the sink files lazily: collect the one row
+        // before the directory goes
+        s.createDataFrame(java.util.Arrays.asList(totals.collect(): _*), totals.schema)
+      } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
     }),
 
     // K1 — DDL synthesis from the inferred schema (golden CREATE TABLE,

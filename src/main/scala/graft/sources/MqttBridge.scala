@@ -7,19 +7,29 @@ import graft.sources.mqtt.MqttClient
   *
   * The reference's pipe architecture is mqtt-callback -> bounded channel ->
   * pipeline (`/root/reference/mqtt.go:117-126`, `pump_pipe.go:42-54`).
-  * Here the callback appends into the [[MemoryBroker]]'s append-only
-  * per-topic log, which (a) decouples network receipt from micro-batch
-  * planning exactly like the reference's channel, and (b) gives the
-  * DataSourceV2 source stable offsets to checkpoint against — the network
-  * leg is at-most-once (QoS 0, as shipped), everything downstream of the
-  * log is exactly-once.
+  * Here the callback appends into the [[MemoryBroker]]'s per-topic log
+  * (absolute offsets; the retained suffix lies above the slowest
+  * registered reader's commit), which (a) decouples network receipt from
+  * micro-batch planning exactly like the reference's channel, and (b)
+  * gives the DataSourceV2 source stable offsets to checkpoint against —
+  * the network leg is at-most-once (QoS 0, as shipped), everything
+  * downstream of the log is exactly-once.
   *
   * One bridge per topic group preserves S2's per-pipe parallelism.
   */
 object MqttBridge {
 
-  final class Bridge private[MqttBridge] (client: MqttClient) extends AutoCloseable {
-    override def close(): Unit = client.close()
+  /** Closing the bridge also releases its broker from the
+    * [[MemoryBroker]] registry: the bridge is the broker's writer, so
+    * once it and the queries reading the broker have stopped, nothing of
+    * the run stays reachable.
+    */
+  final class Bridge private[MqttBridge] (client: MqttClient, brokerName: String)
+      extends AutoCloseable {
+    override def close(): Unit = {
+      client.close()
+      MemoryBroker.release(brokerName)
+    }
   }
 
   /** Subscribe `topics` at `host:port` and append deliveries into
@@ -41,6 +51,6 @@ object MqttBridge {
       keepAliveSecs = keepAliveSecs, pingTimeoutSecs = pingTimeoutSecs,
       scheme = scheme, sslTrustStore = sslTrustStore)
     client.subscribe(topics)
-    new Bridge(client)
+    new Bridge(client, brokerName)
   }
 }

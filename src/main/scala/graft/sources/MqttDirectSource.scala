@@ -94,57 +94,6 @@ case class CountOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
-/** The driver-side delivery buffer behind [[MqttDirectMicroBatchStream]],
-  * addressed by MONOTONIC ABSOLUTE offsets (total messages ever delivered)
-  * while physically holding only the undelivered suffix:
-  *
-  *  - `trimTo(committed)` drops the delivered prefix, so a long-running
-  *    stream's driver memory is bounded by (latest - last committed), not
-  *    by stream lifetime;
-  *  - `rebaseTo(restored)` maps a checkpointed offset from a PREVIOUS
-  *    process life onto this buffer: the pre-restart messages are gone —
-  *    QoS 0 never re-sends — so the restored position becomes the new
-  *    base and the replayed batch drains empty instead of silently
-  *    re-labeling fresh messages as old ones. Messages the reconnected
-  *    client buffered BEFORE the checkpoint was restored are fresh
-  *    deliveries of this process life, so they are KEPT and relabeled to
-  *    offsets >= restored — clearing them would lose data beyond what
-  *    QoS-0 semantics already concede;
-  *  - slicing clamps to the held window and never narrows a Long offset
-  *    to Int before the clamp.
-  */
-private[sources] final class DeliveryBuffer {
-  type Msg = (String, Array[Byte], Long)
-  private val buf = new scala.collection.mutable.ArrayBuffer[Msg]()
-  private var base = 0L
-
-  def append(m: Msg): Unit = synchronized { buf += m }
-  def end: Long = synchronized(base + buf.length)
-
-  /** Adopt a restored checkpoint offset that lies beyond anything this
-    * instance has buffered (restart case). No-op during steady state.
-    * Already-buffered messages are fresh deliveries of THIS process life
-    * (the pre-restart ones are unrecoverable over QoS 0), so they stay
-    * buffered and simply take offsets >= `n`; the replayed span
-    * [start, n) still drains empty via the slice clamp.
-    */
-  def rebaseTo(n: Long): Unit = synchronized {
-    if (n > base + buf.length) base = n
-  }
-
-  def slice(s: Long, e: Long): Array[Msg] = synchronized {
-    val lo = math.min(math.max(0L, s - base), buf.length.toLong)
-    val hi = math.max(lo, math.min(buf.length.toLong, e - base))
-    buf.slice(lo.toInt, hi.toInt).toArray
-  }
-
-  /** Drop the delivered prefix up to absolute offset `n`. */
-  def trimTo(n: Long): Unit = synchronized {
-    val drop = math.min(math.max(0L, n - base), buf.length.toLong).toInt
-    if (drop > 0) { buf.remove(0, drop); base += drop }
-  }
-}
-
 class MqttDirectMicroBatchStream(host: String, port: Int, topics: Seq[String],
                                  username: String = "", password: String = "",
                                  qos: Int = 0, cleanSession: Boolean = true,
@@ -156,8 +105,8 @@ class MqttDirectMicroBatchStream(host: String, port: Int, topics: Seq[String],
                                  sslTrustStore: Option[(String, String)] = None)
     extends MicroBatchStream {
 
-  // delivery buffer: (topic, payload, receivedTimeMicros), appended by the
-  // client's reader thread, drained by micro-batches, trimmed on commit
+  // delivery buffer, appended by the client's reader thread, drained by
+  // micro-batches, trimmed on commit; a restored offset rebases it
   private val buffer = new DeliveryBuffer
   @volatile private var stopped = false
 
@@ -165,7 +114,7 @@ class MqttDirectMicroBatchStream(host: String, port: Int, topics: Seq[String],
     val c = new MqttClient(host, port,
       s"graft-direct-${System.identityHashCode(this)}",
       onMessage = (topic, payload) =>
-        buffer.append((topic, payload, System.currentTimeMillis() * 1000L)),
+        buffer.append(BrokerMessage(topic, payload, System.currentTimeMillis() * 1000L)),
       username = username, password = password, cleanSession = cleanSession,
       keepAliveSecs = keepAliveSecs, pingTimeoutSecs = pingTimeoutSecs,
       scheme = scheme, sslTrustStore = sslTrustStore)
@@ -232,7 +181,7 @@ class MqttDirectMicroBatchStream(host: String, port: Int, topics: Seq[String],
     val slice = buffer.slice(
       start.asInstanceOf[CountOffset].n, end.asInstanceOf[CountOffset].n)
     // one partition per topic group — the reference's per-pipe shape (S2)
-    slice.groupBy(_._1).map { case (_, msgs) =>
+    slice.groupBy(_.topic).map { case (_, msgs) =>
       MqttDirectPartition(msgs): InputPartition
     }.toArray
   }
@@ -262,7 +211,7 @@ class MqttDirectMicroBatchStream(host: String, port: Int, topics: Seq[String],
 /** Rows ship inside the partition (driver-buffered source, like Spark's
   * own socket source).
   */
-case class MqttDirectPartition(msgs: Array[(String, Array[Byte], Long)])
+case class MqttDirectPartition(msgs: Array[BrokerMessage])
     extends InputPartition
 
 class MqttDirectReaderFactory extends PartitionReaderFactory {
@@ -270,10 +219,10 @@ class MqttDirectReaderFactory extends PartitionReaderFactory {
     val p = partition.asInstanceOf[MqttDirectPartition]
     new PartitionReader[InternalRow] {
       private val it = p.msgs.iterator
-      private var cur: (String, Array[Byte], Long) = _
+      private var cur: BrokerMessage = _
       override def next(): Boolean = { if (it.hasNext) { cur = it.next(); true } else false }
       override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(cur._1), cur._2, cur._3)
+        InternalRow(UTF8String.fromString(cur.topic), cur.payload, cur.receivedTimeMicros)
       override def close(): Unit = ()
     }
   }

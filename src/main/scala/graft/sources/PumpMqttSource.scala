@@ -115,7 +115,9 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  private def broker: MemoryBroker = MemoryBroker.get(brokerName)
+  private val broker: MemoryBroker = MemoryBroker.get(brokerName)
+  // pins the broker's logs until this stream commits past them or stops
+  private val reader = broker.register(topics)
 
   /** Concrete topics behind the subscription list: wildcard filters (`+`
     * single-level, `#` tail — the reference's non-grouped `root/prefix/#`
@@ -139,8 +141,9 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
   private def currentEnd: Map[String, Long] =
     availableNowEnd.getOrElse(resolvedTopics.map(t => t -> broker.endOffset(t)).toMap)
 
+  /** With no checkpoint, start at the earliest message still retained. */
   override def initialOffset(): Offset =
-    TopicOffsets(resolvedTopics.map(_ -> 0L).toMap)
+    TopicOffsets(resolvedTopics.map(t => t -> broker.startOffset(t)).toMap)
 
   override def latestOffset(): Offset = TopicOffsets(currentEnd)
 
@@ -194,8 +197,9 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
   override def createReaderFactory(): PartitionReaderFactory =
     new PumpMqttReaderFactory
 
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  override def commit(end: Offset): Unit =
+    reader.commit(end.asInstanceOf[TopicOffsets].counts)
+  override def stop(): Unit = reader.close()
 }
 
 case class PumpMqttPartition(brokerName: String, topic: String, from: Long, until: Long)

@@ -62,7 +62,7 @@ object Pump {
     // fan-out is the canonical foreachBatch pattern for exactly this
     // reason.
     val withMid = batch
-      .withColumn("mid", RandomId.random_id(cfg.midLength, seed = batchId))
+      .withColumn("mid", RandomId.random_id(cfg.midLength, seed = midSeed(batchId)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // K4 — raw path stores every message, parse failures included (T6
@@ -134,6 +134,15 @@ object Pump {
       live.foreach(f => f(rawFrame, if (rawOnly) None else Some(adapterFrame)))
     } finally withMid.unpersist()
   }
+
+  /** The `random_id` seed of batch `batchId`. RandomId seeds each
+    * partition with `seed + partitionIndex` and `java.util.Random` keeps
+    * the seed's low 48 bits, so putting the batch id above 20 partition
+    * bits gives every (batch, partition) pair below 2^28 batches and 2^20
+    * partitions its own id sequence, where `seed + partitionIndex` alone
+    * would repeat across neighbouring batches. Batch 0 keeps seed 0.
+    */
+  private def midSeed(batchId: Long): Long = batchId << 20
 
   /** The promised compaction: fold a sink's per-batch directories into
     * consolidated per-date files. Streaming ingest accumulates one

@@ -111,14 +111,14 @@ class MqttDirectSpec extends SparkSpec {
 
   test("delivery buffer: commit trims the delivered prefix (bounded driver memory)") {
     val b = new DeliveryBuffer
-    def msg(i: Int) = (s"t", Array[Byte](i.toByte), i.toLong)
+    def msg(i: Int) = BrokerMessage("t", Array[Byte](i.toByte), i.toLong)
     (0 until 10).foreach(i => b.append(msg(i)))
     assert(b.end === 10)
-    assert(b.slice(0, 4).map(_._3).toSeq === Seq(0L, 1L, 2L, 3L))
+    assert(b.slice(0, 4).map(_.receivedTimeMicros).toSeq === Seq(0L, 1L, 2L, 3L))
     b.trimTo(4) // batch [0,4) committed: prefix physically dropped...
     assert(b.end === 10) // ...but absolute offsets keep counting
-    assert(b.slice(4, 10).map(_._3).toSeq === (4L until 10L))
-    assert(b.slice(0, 10).map(_._3).toSeq === (4L until 10L)) // clamped, no wrap
+    assert(b.slice(4, 10).map(_.receivedTimeMicros).toSeq === (4L until 10L))
+    assert(b.slice(0, 10).map(_.receivedTimeMicros).toSeq === (4L until 10L)) // clamped, no wrap
     b.trimTo(2) // stale commit: never un-trims
     assert(b.slice(4, 10).length === 6)
   }
@@ -131,10 +131,10 @@ class MqttDirectSpec extends SparkSpec {
     assert(b.end === 100)
     assert(b.slice(90, 100).isEmpty) // replayed last batch drains empty
     // fresh deliveries take offsets >= 100 instead of masquerading as 0..N
-    b.append(("t", Array[Byte](1), 1L))
-    b.append(("t", Array[Byte](2), 2L))
+    b.append(BrokerMessage("t", Array[Byte](1), 1L))
+    b.append(BrokerMessage("t", Array[Byte](2), 2L))
     assert(b.end === 102)
-    assert(b.slice(100, 102).map(_._3).toSeq === Seq(1L, 2L))
+    assert(b.slice(100, 102).map(_.receivedTimeMicros).toSeq === Seq(1L, 2L))
     b.rebaseTo(50) // steady-state deserialize of an old offset: no-op
     assert(b.end === 102)
   }
@@ -273,10 +273,10 @@ class MqttDirectSpec extends SparkSpec {
     // the reconnected client delivered 3 messages BEFORE the checkpointed
     // offset was restored — they are fresh (this process life), not the
     // unrecoverable pre-restart ones, and must not be dropped
-    (1 to 3).foreach(i => b.append(("t", Array[Byte](i.toByte), i.toLong)))
+    (1 to 3).foreach(i => b.append(BrokerMessage("t", Array[Byte](i.toByte), i.toLong)))
     b.rebaseTo(100)
     assert(b.end === 103) // relabeled to offsets 100..102, not cleared
     assert(b.slice(97, 100).isEmpty) // replayed pre-restart span still empty
-    assert(b.slice(100, 103).map(_._3).toSeq === Seq(1L, 2L, 3L))
+    assert(b.slice(100, 103).map(_.receivedTimeMicros).toSeq === Seq(1L, 2L, 3L))
   }
 }

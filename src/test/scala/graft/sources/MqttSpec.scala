@@ -93,6 +93,10 @@ class MqttSpec extends SparkSpec {
       assert(spark.read.parquet(sinks.rawPath).count() === 12)
       assert(spark.read.parquet(sinks.adapterPath).count() === 24)
       bridge.close(); pub.close()
+      // closing the bridge dropped the broker it fed from the registry,
+      // so the name now resolves to a fresh, empty one
+      assert(total === 0)
+      MemoryBroker.release(brokerName)
     } finally server.close()
   }
 }

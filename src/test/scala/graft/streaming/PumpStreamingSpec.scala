@@ -126,6 +126,25 @@ class PumpStreamingSpec extends SparkSpec {
       .where(col("batch_id") === 0).count() === 6)
   }
 
+  test("mids do not repeat across consecutive batches over 5 topic partitions") {
+    import graft.engine.{JsonInference, PumpQueries}
+    import spark.implicits._
+    val inf = JsonInference.inferFromSample(PumpQueries.payloadSample)
+    val out = tmpDir("pump-mids")
+    val sinks = Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
+    // one input partition per topic, as the source plans a batch
+    def batchOf(n: Int) = spark.sparkContext.parallelize(0 until n, 5)
+      .map(i => (s"pump/data/${i % 5}", s"""{"r1": {"k": $i}}""".getBytes("UTF-8"),
+        new java.sql.Timestamp(1704067200000L + i * 1000L)))
+      .toDF("topic", "payload", "received_time")
+    val write = Pump.writeBatch(PumpConfig(jsonSample = PumpQueries.payloadSample), inf, sinks) _
+    write(batchOf(10), 0L)
+    write(batchOf(10), 1L)
+    val raw = spark.read.parquet(sinks.rawPath)
+    assert(raw.count() === 20)
+    assert(raw.select("mid").distinct().count() === 20)
+  }
+
   test("compaction folds per-batch dirs into per-date files, rows intact") {
     import graft.engine.{JsonInference, PumpQueries}
     import org.apache.spark.sql.functions._
@@ -249,6 +268,46 @@ class PumpStreamingSpec extends SparkSpec {
     assert(got.count() === 25)
     // all 5 topic groups present (begingroupnum=0..endgroupnum=4)
     assert(got.select("topic").distinct().count() === 5)
+  }
+
+  test("pump + monitor on one broker: each topic keeps at most one batch behind the slower query") {
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.sources.TopicOffsets
+    val brokerName = "pump-retain"
+    val b = MemoryBroker.get(brokerName)
+    val out = tmpDir("pump-retain")
+    val sinks = Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
+    val trigger = Trigger.ProcessingTime("200 milliseconds")
+    val pump = Pump.start(spark, cfg, sinks, brokerName, trigger)
+    val mon = MonitorStream.start(spark, cfg, brokerName, s"$out/mon-ckpt", trigger)
+    def readTo(q: StreamingQuery): Map[String, Long] =
+      Option(q.lastProgress).map(p => TopicOffsets.fromJson(p.sources.head.endOffset).counts)
+        .getOrElse(Map.empty)
+    val perTopic = 2
+    val rounds = 4
+    try {
+      (1 to rounds).foreach { round =>
+        publishGolden(brokerName, perTopic * cfg.sourceTopics.size)
+        val ends = cfg.sourceTopics.map(t => t -> b.endOffset(t)).toMap
+        val deadline = System.currentTimeMillis() + 60000
+        while (!Seq(pump, mon).forall(readTo(_) == ends) && System.currentTimeMillis() < deadline) {
+          Seq(pump, mon).foreach(_.exception.foreach(e => throw e))
+          Thread.sleep(50)
+        }
+        assert(Seq(pump, mon).forall(readTo(_) == ends), s"round $round not read by both queries")
+        // both queries read every earlier round before this one was
+        // published, and each commits its previous batch's end when it
+        // plans the next, so no topic holds more than this round
+        cfg.sourceTopics.foreach { t =>
+          assert(b.endOffset(t) === round * perTopic)
+          assert(b.endOffset(t) - b.startOffset(t) <= perTopic, s"topic $t after round $round")
+        }
+      }
+    } finally { mon.stop(); pump.stop() }
+    val total = perTopic * cfg.sourceTopics.size * rounds
+    assert(spark.read.parquet(sinks.rawPath).count() === total)
+    assert(spark.read.parquet(sinks.adapterPath).count() === 2 * total)
+    assert(mon.recentProgress.map(_.numInputRows).sum === total)
   }
 
   test("listener monitor publishes per-batch throughput docs (G1-G3 progress face)") {
