@@ -2,16 +2,18 @@ package graft.sources
 
 import java.util
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReadMinRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
 /** S1/S2 — the MQTT subscribe source as a Spark DataSourceV2
@@ -34,6 +36,8 @@ import scala.jdk.CollectionConverters._
   *   spark.readStream.format("pump-mqtt")
   *     .option("broker", "default")        // MemoryBroker registry key
   *     .option("topics", "pump/data/0,pump/data/1")
+  *     .option("minmsgspertrigger", "64")  // optional admission control,
+  *     .option("maxtriggerdelay", "5s")     // see PumpMqttSource.readLimitOf
   *     .load()
   * }}}
   * Schema: `topic string, payload binary, received_time timestamp` —
@@ -60,6 +64,52 @@ object PumpMqttSource {
 
   def topicsOf(options: CaseInsensitiveStringMap): Seq[String] =
     options.getOrDefault("topics", "").split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** The stream's default read limit, from the options that mirror Kafka's
+    * `maxOffsetsPerTrigger`, `minOffsetsPerTrigger` and `maxTriggerDelay`:
+    *  - `maxmsgspertrigger` caps the messages one micro-batch admits. It
+    *    is a backpressure bound, like the reference's clamped channel
+    *    buffers (SURVEY §4.2); it never starts a batch early.
+    *  - `minmsgspertrigger` holds a batch back until that many messages
+    *    are pending over all topics, or `maxtriggerdelay` (ms, or a
+    *    duration such as `5s`; default `15m`, as in Kafka) has passed since
+    *    the last admitted batch. With Spark's default trigger this is the
+    *    reference's time-or-size commit policy (K3, `data_dbstore.go:18-19`).
+    */
+  def readLimitOf(options: CaseInsensitiveStringMap): ReadLimit = {
+    val max = Option(options.get("maxmsgspertrigger")).map(n => ReadLimit.maxRows(n.toLong))
+    val min = Option(options.get("minmsgspertrigger")).map(n => ReadLimit.minRows(n.toLong,
+      JavaUtils.timeStringAsMs(options.getOrDefault("maxtriggerdelay", "15m"))))
+    (min ++ max).toSeq match {
+      case Seq() => ReadLimit.allAvailable()
+      case Seq(one) => one
+      case both => ReadLimit.compositeLimit(both.toArray)
+    }
+  }
+
+  /** Splits a budget of `max` messages across topics by water-filling:
+    * each topic with messages pending gets `min(pending, equal share of
+    * what is left)`, repeated until the budget or the pending messages
+    * run out, and a last remainder smaller than the number of topics still
+    * pending goes one message each in sorted topic order. So no topic
+    * starves behind busier ones earlier in sort order, and the split is a
+    * pure function of its inputs, which keeps replanning after a restart
+    * deterministic.
+    */
+  def fairShare(pending: Map[String, Long], max: Long): Map[String, Long] = {
+    @tailrec def fill(open: Seq[(String, Long)], left: Long,
+                      got: Map[String, Long]): Map[String, Long] =
+      if (left <= 0 || open.isEmpty) got
+      else {
+        val share = left / open.size
+        val grant = (if (share == 0) open.take(left.toInt).map { case (t, _) => t -> 1L }
+                     else open.map { case (t, p) => t -> math.min(p, share) }).toMap
+        fill(open.map { case (t, p) => t -> (p - grant.getOrElse(t, 0L)) }.filter(_._2 > 0),
+          left - grant.values.sum,
+          got ++ grant.map { case (t, n) => t -> (got.getOrElse(t, 0L) + n) })
+      }
+    fill(pending.toSeq.filter(_._2 > 0).sortBy(_._1), max, Map.empty)
+  }
 }
 
 class PumpMqttTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -71,14 +121,14 @@ class PumpMqttTable(options: CaseInsensitiveStringMap) extends Table with Suppor
     () => new PumpMqttScan(
       options.getOrDefault("broker", "default"),
       PumpMqttSource.topicsOf(options),
-      Option(options.get("maxmsgspertrigger")).map(_.toLong))
+      PumpMqttSource.readLimitOf(options))
 }
 
 class PumpMqttScan(brokerName: String, topics: Seq[String],
-                   maxMsgsPerTrigger: Option[Long]) extends Scan {
+                   readLimit: ReadLimit) extends Scan {
   override def readSchema(): StructType = PumpMqttSource.Schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new PumpMqttMicroBatchStream(brokerName, topics, maxMsgsPerTrigger)
+    new PumpMqttMicroBatchStream(brokerName, topics, readLimit)
 }
 
 /** Offset = per-topic message count, serialized as sorted-key JSON.
@@ -103,15 +153,13 @@ object TopicOffsets {
         -> m.group(2).toLong).toMap)
 }
 
-/** @param maxMsgsPerTrigger the size-half of the reference's time-or-size
-  *   commit policy (K3, DBObjectItemsSize=64, `data_dbstore.go:18`): caps
-  *   messages admitted per micro-batch via Spark admission control; the
-  *   trigger interval carries the time-half. Doubles as the backpressure
-  *   bound the reference gets from its clamped channel buffers
-  *   (SURVEY §4.2).
+/** @param readLimit the default admission control
+  *   ([[PumpMqttSource.readLimitOf]]): `ReadLimit.maxRows` caps a batch,
+  *   `ReadLimit.minRows` holds one back until enough messages are pending
+  *   or its delay has passed; a composite of the two applies both.
   */
 class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
-                               maxMsgsPerTrigger: Option[Long] = None)
+                               readLimit: ReadLimit = ReadLimit.allAvailable())
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -147,36 +195,44 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
 
   override def latestOffset(): Offset = TopicOffsets(currentEnd)
 
-  override def getDefaultReadLimit: ReadLimit =
-    maxMsgsPerTrigger.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
+  override def getDefaultReadLimit: ReadLimit = readLimit
 
   override def reportLatestOffset(): Offset = latestOffset()
 
-  private def maxRowsOf(limit: ReadLimit): Option[Long] = limit match {
-    case mr: ReadMaxRows => Some(mr.maxRows())
-    case c: CompositeReadLimit =>
-      c.getReadLimits.toSeq.flatMap(maxRowsOf).reduceOption((a, b) => math.min(a, b))
-    case _ => None
+  private def limitsOf(limit: ReadLimit): Seq[ReadLimit] = limit match {
+    case c: CompositeReadLimit => c.getReadLimits.toSeq.flatMap(limitsOf)
+    case l => Seq(l)
   }
 
-  /** Admission-controlled latest offset: admit up to the limit, spread
-    * across topics in sorted order (deterministic restart).
+  /** When the last batch was admitted under a `minRows` limit; 0 admits the
+    * first poll at once. Only the micro-batch thread calls `latestOffset`.
+    */
+  private var lastAdmitMs = 0L
+
+  /** Admission-controlled latest offset. Under `minRows(n, delay)` it
+    * returns `startOffset` (no batch) while fewer than n messages are
+    * pending over all topics and less than the delay has passed since the
+    * last admitted batch, except under Trigger.AvailableNow, whose frozen
+    * end must drain. Under `maxRows(max)` it admits at most `max`,
+    * split across topics by [[PumpMqttSource.fairShare]].
     */
   override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
     val start = startOffset.asInstanceOf[TopicOffsets].counts
     val end = currentEnd
-    maxRowsOf(limit) match {
-      case Some(max) =>
-        var budget = max
-        val admitted = scala.collection.mutable.Map(start.toSeq: _*)
-        end.keys.toSeq.sorted.foreach { t =>
-          val from = start.getOrElse(t, 0L)
-          val take = math.min(end.getOrElse(t, 0L) - from, budget)
-          if (take > 0) { admitted(t) = from + take; budget -= take }
-          else admitted.getOrElseUpdate(t, from)
-        }
-        TopicOffsets(admitted.toMap)
-      case None => TopicOffsets(end)
+    val limits = limitsOf(limit)
+    val pending = end.map { case (t, e) => t -> math.max(0L, e - start.getOrElse(t, 0L)) }
+    val minRows = limits.collectFirst { case m: ReadMinRows if availableNowEnd.isEmpty => m }
+    val now = System.currentTimeMillis()
+    if (minRows.exists(m => pending.values.sum < m.minRows && now - lastAdmitMs < m.maxTriggerDelayMs)) {
+      startOffset
+    } else {
+      if (minRows.nonEmpty) lastAdmitMs = now
+      limits.collect { case m: ReadMaxRows => m.maxRows() }.reduceOption(_ min _) match {
+        case Some(max) =>
+          val take = PumpMqttSource.fairShare(pending, max)
+          TopicOffsets(start ++ end.keys.map(t => t -> (start.getOrElse(t, 0L) + take.getOrElse(t, 0L))))
+        case None => TopicOffsets(end)
+      }
     }
   }
 

@@ -17,9 +17,11 @@ import graft.functions.RandomId
   *
   * Spark translation: ONE streaming query; `foreachBatch` persists the
   * micro-batch and writes raw before adapter — single-pass fan-out with
-  * the reference's dual-sink consistency guarantee (SURVEY §7.3). The
-  * trigger interval carries K3's time half; the size half is the source's
-  * per-trigger cap (rate limiting), which is the Spark-native equivalent.
+  * the reference's dual-sink consistency guarantee (SURVEY §7.3). K3 is
+  * the source's `ReadLimit.minRows` admission control under Spark's
+  * default trigger (see [[start]]): a batch starts once `commitItems` (64)
+  * messages are pending or `commitIntervalSecs` (5 s) after the previous
+  * one, whichever comes first.
   *
   * Scale: both sinks append date-partitioned parquet (MergeTree date key
   * analog); the adapter branch's explode/flatten is narrow (no shuffle),
@@ -219,10 +221,17 @@ object Pump {
     dates.length
   }
 
-  /** Start the pump: source stream -> mid -> dual-sink foreachBatch with
-    * the reference's 5 s commit interval (K3, `data_dbstore.go:19`).
-    */
-  /** @param dedupeWindow when set (e.g. "10 minutes"), drops duplicate
+  /** Start the pump: source stream -> mid -> dual-sink foreachBatch.
+    *
+    * @param trigger when null, the reference's time-or-size commit policy
+    *   (K3, `data_dbstore.go:18-20,430-452`): Spark's default trigger polls
+    *   as soon as the previous batch ends, and the source admits a batch
+    *   once `cfg.db.commitItems` messages are pending over all topics or
+    *   `cfg.db.commitIntervalSecs` have passed since the last one. Under
+    *   load, batches run back to back and grow with the backlog; at a
+    *   trickle the pump commits every commit interval. An explicit trigger
+    *   replaces the policy: every trigger admits whatever is pending.
+    * @param dedupeWindow when set (e.g. "10 minutes"), drops duplicate
     *   payloads arriving within the watermark window via stateful
     *   `dropDuplicatesWithinWatermark` on the payload digest — the X1
     *   exact-dedup operator in streaming form, and an idempotence guard
@@ -237,11 +246,13 @@ object Pump {
             dedupeWindow: Option[String] = None,
             live: Option[(DataFrame, Option[DataFrame]) => Unit] = None): StreamingQuery = {
     val inf = JsonInference.inferFromSample(cfg.jsonSample)
-    val raw = spark.readStream
+    val reader = spark.readStream
       .format("pump-mqtt")
       .option("broker", brokerName)
       .option("topics", cfg.sourceTopics.mkString(","))
-      .load()
+    val raw = (if (trigger != null) reader
+               else reader.option("minmsgspertrigger", cfg.db.commitItems.toLong)
+                 .option("maxtriggerdelay", s"${cfg.db.commitIntervalSecs}s")).load()
     val source = dedupeWindow match {
       case Some(w) =>
         raw.withColumn("__digest", md5(col("payload")))
@@ -250,11 +261,8 @@ object Pump {
           .drop("__digest")
       case None => raw
     }
-    val t = if (trigger != null) trigger
-            else Trigger.ProcessingTime(s"${cfg.db.commitIntervalSecs} seconds")
-    source.writeStream
-      .queryName("graft-pump")
-      .trigger(t)
+    val writer = source.writeStream.queryName("graft-pump")
+    (if (trigger != null) writer.trigger(trigger) else writer)
       .option("checkpointLocation", sinks.checkpoint)
       .foreachBatch(writeBatch(cfg, inf, sinks, rawOnly, live) _)
       .start()

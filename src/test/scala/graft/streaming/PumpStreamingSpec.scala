@@ -223,6 +223,43 @@ class PumpStreamingSpec extends SparkSpec {
     assert(batches.forall(_.numInputRows <= 7))
   }
 
+  test("default policy: a batch starts at commitItems pending, else after the commit interval (K3)") {
+    import org.apache.spark.sql.streaming.StreamingQueryProgress
+    val brokerName = "pump-k3-default"
+    val b = MemoryBroker.get(brokerName)
+    // n equals the first burst, so no poll can split it between two batches
+    val kcfg = cfg.copy(db = cfg.db.copy(commitItems = 100))
+    val out = tmpDir("pump-k3-default")
+    val sinks = Pump.Sinks(s"$out/raw", s"$out/adapter", s"$out/ckpt")
+    val q = Pump.start(spark, kcfg, sinks, brokerName)
+    def batches: Seq[StreamingQueryProgress] = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+    def awaitRows(n: Long, deadline: Long): Unit = {
+      while (batches.map(_.numInputRows).sum < n && System.currentTimeMillis() < deadline) {
+        q.exception.foreach(e => throw e)
+        Thread.sleep(20)
+      }
+    }
+    def startMs(p: StreamingQueryProgress) = java.time.Instant.parse(p.timestamp).toEpochMilli
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      while (!q.status.message.startsWith("Waiting for data") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      val burst = System.currentTimeMillis()
+      publishGolden(brokerName, 100)
+      awaitRows(100, burst + 60000)
+      assert(batches.map(_.numInputRows) === Seq(100L))
+      // the pump polls continuously: the burst did not wait for a 5 s tick
+      assert(startMs(batches.head) - burst < 2500)
+      val trickle = System.currentTimeMillis()
+      publishGolden(brokerName, 10)
+      awaitRows(110, trickle + 30000) // the commit interval releases them
+      assert(batches.map(_.numInputRows) === Seq(100L, 10L))
+      // held for the commit interval after the burst's batch was admitted
+      assert(startMs(batches(1)) - startMs(batches.head) >= 4000)
+      assert(spark.read.parquet(sinks.rawPath).count() === 110)
+    } finally q.stop()
+  }
+
   test("streaming dedup drops duplicate payloads within the watermark (X1 streaming form)") {
     val brokerName = "pump-dedup"
     val b = MemoryBroker.get(brokerName)
