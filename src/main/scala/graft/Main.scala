@@ -45,12 +45,10 @@ object Main {
       val availableNow = rest.contains("--available-now")
       val spark = session()
       val brokerName = "graft-run"
-      // broker URI tcp://host:port -> bridge subscription feeding the source
-      val uri = new java.net.URI(cfg.source.server)
-      // credentials come from the INI's source-mqtt section (conf.go),
-      // same as the reference's client options (mqtt.go:46-52)
-      val bridge = MqttBridge.start(uri.getHost, uri.getPort, cfg.sourceTopics,
-        brokerName, username = cfg.source.username, password = cfg.source.password)
+      // the INI's source-mqtt section (conf.go) -> bridge subscription
+      // feeding the source, with the reference's client options
+      // (mqtt.go:41-52) and auto-reconnect
+      val bridge = MqttBridge.start(MqttBridge.options(cfg.source), cfg.sourceTopics, brokerName)
       spark.streams.addListener(new MonitorListener(cfg, brokerName))
       val sinks = Pump.Sinks(s"$outDir/raw", s"$outDir/adapter", s"$outDir/ckpt")
       val trigger = if (availableNow) Trigger.AvailableNow() else null

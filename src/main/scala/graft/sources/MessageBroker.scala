@@ -5,50 +5,13 @@ import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** S1's transport seam. The reference subscribes to an MQTT broker
-  * (`/root/reference/mqtt.go:69-89`); the Spark source below reads through
-  * this trait so the same `MicroBatchStream` serves (a) the in-process
-  * [[MemoryBroker]] used by tests/local mode and (b) a real network MQTT
-  * client in production (paho or a raw-TCP MQTT 3.1.1 client — a network
-  * dependency deliberately kept out of the oracle path, SURVEY §4.3).
-  *
-  * Contract: per topic, a log addressed by absolute offsets (the count of
-  * messages published before it); the retained suffix lies above the
-  * slowest registered reader's commit. Exact re-reads of everything a
-  * reader has not committed are what make the Spark source *replayable*
-  * (checkpointed offsets + re-read = at-least-once delivery; combined
-  * with the pump's per-batchId idempotent sink writes it is effectively
-  * exactly-once end to end — a documented improvement over the
-  * reference's QoS-0 at-most-once, SURVEY §4.2).
-  */
-trait MessageBroker {
-  /** Current end offset (count of messages ever published) for a topic. */
-  def endOffset(topic: String): Long
-  /** Read messages [from, until) for a topic. */
-  def read(topic: String, from: Long, until: Long): Seq[BrokerMessage]
-}
-
 final case class BrokerMessage(topic: String, payload: Array[Byte], receivedTimeMicros: Long)
 
 /** A message log addressed by MONOTONIC ABSOLUTE offsets (total messages
   * ever appended) that physically holds only the suffix not yet trimmed:
-  * [[MemoryBroker]]'s per-topic log and the driver-side delivery buffer
-  * of [[MqttDirectMicroBatchStream]].
-  *
-  *  - `trimTo(n)` drops the prefix below absolute offset `n`, so memory is
-  *    bounded by what readers have not committed, not by stream lifetime;
-  *  - `rebaseTo(restored)` maps a checkpointed offset from a PREVIOUS
-  *    process life onto this buffer: the pre-restart messages are gone —
-  *    QoS 0 never re-sends — so the restored position becomes the new
-  *    base and the replayed batch drains empty instead of silently
-  *    re-labeling fresh messages as old ones. Messages the reconnected
-  *    client buffered BEFORE the checkpoint was restored are fresh
-  *    deliveries of this process life, so they are KEPT and relabeled to
-  *    offsets >= restored — clearing them would lose data beyond what
-  *    QoS-0 semantics already concede;
-  *  - `slice` clamps to the held window (the direct source's QoS-0
-  *    restart rule) and never narrows a Long offset to Int before the
-  *    clamp; `exactSlice` refuses a start below the held window instead.
+  * one topic of a [[MemoryBroker]]. `trimTo(n)` drops the prefix below
+  * absolute offset `n`, so memory is bounded by what readers have not
+  * committed, not by stream lifetime.
   */
 private[sources] final class DeliveryBuffer {
   private val buf = new mutable.ArrayBuffer[BrokerMessage]()
@@ -58,31 +21,16 @@ private[sources] final class DeliveryBuffer {
   def start: Long = synchronized(base)
   def end: Long = synchronized(base + buf.length)
 
-  /** Adopt a restored checkpoint offset that lies beyond anything this
-    * instance has buffered (restart case). No-op during steady state.
-    * Already-buffered messages are fresh deliveries of THIS process life
-    * (the pre-restart ones are unrecoverable over QoS 0), so they stay
-    * buffered and simply take offsets >= `n`; the replayed span
-    * [start, n) still drains empty via the slice clamp.
+  /** Messages [s, e), clamped to the end. Offsets below the retained start
+    * were trimmed, so asking for them is an error, never a silently
+    * shorter batch. No Long offset is narrowed to Int before the clamp.
     */
-  def rebaseTo(n: Long): Unit = synchronized {
-    if (n > base + buf.length) base = n
-  }
-
   def slice(s: Long, e: Long): Array[BrokerMessage] = synchronized {
-    val lo = math.min(math.max(0L, s - base), buf.length.toLong)
-    val hi = math.max(lo, math.min(buf.length.toLong, e - base))
-    buf.slice(lo.toInt, hi.toInt).toArray
-  }
-
-  /** `slice` for a reader promised exact replay: offsets below the
-    * retained start were trimmed, so asking for them is an error, never
-    * a silently shorter batch.
-    */
-  def exactSlice(s: Long, e: Long): Array[BrokerMessage] = synchronized {
     if (s < base) throw new IllegalStateException(
       s"offset $s lies below the retained start $base: every registered reader had committed past it")
-    slice(s, e)
+    val lo = math.min(s - base, buf.length.toLong)
+    val hi = math.max(lo, math.min(buf.length.toLong, e - base))
+    buf.slice(lo.toInt, hi.toInt).toArray
   }
 
   /** Drop the prefix below absolute offset `n` (a stale `n` never un-trims). */
@@ -92,9 +40,9 @@ private[sources] final class DeliveryBuffer {
   }
 }
 
-/** In-process topic log, keyed by a broker id so multiple concurrent
-  * tests don't share state. Stands in for the MQTT broker the way
-  * `MemoryStream` stands in for a socket.
+/** In-process topic log, keyed by a broker name so concurrent queries
+  * don't share state: [[MqttBridge]] appends, the `pump-mqtt` source reads
+  * and re-reads exactly (SURVEY §4.2). Resolved per JVM (`local[n]`).
   *
   * Offsets are absolute; the retained suffix lies above the slowest
   * registered reader's commit. Each [[MemoryBroker.Reader]] (one per
@@ -110,6 +58,11 @@ private[sources] final class DeliveryBuffer {
   * throws rather than skip messages.
   */
 class MemoryBroker {
+  /** Offsets count from 0 in every incarnation, so an offset means
+    * something only against the one it was read from.
+    */
+  val incarnation: String = java.util.UUID.randomUUID().toString
+
   private val logs = new ConcurrentHashMap[String, DeliveryBuffer]()
   private val readers = mutable.Set[MemoryBroker.Reader]() // guarded by itself
 
@@ -133,7 +86,7 @@ class MemoryBroker {
   def read(topic: String, from: Long, until: Long): Seq[BrokerMessage] = {
     val log = logs.get(topic)
     if (log == null) Seq.empty
-    else ArraySeq.unsafeWrapArray(log.exactSlice(from, until))
+    else ArraySeq.unsafeWrapArray(log.slice(from, until))
   }
 
   def topics: Seq[String] = logs.keys().asScala.toSeq
@@ -176,7 +129,7 @@ class MemoryBroker {
 /** Named-broker registry so executors (same JVM in local mode) and the
   * driver resolve the same instance via a string option.
   */
-object MemoryBroker extends MessageBroker {
+object MemoryBroker {
   private val brokers = new ConcurrentHashMap[String, MemoryBroker]()
   def get(name: String): MemoryBroker =
     brokers.computeIfAbsent(name, _ => new MemoryBroker)
@@ -198,9 +151,4 @@ object MemoryBroker extends MessageBroker {
     /** Stop pinning: the reader is gone. */
     def close(): Unit = broker.unregister(this)
   }
-
-  // MessageBroker over the default instance (single-broker convenience)
-  override def endOffset(topic: String): Long = get("default").endOffset(topic)
-  override def read(topic: String, from: Long, until: Long): Seq[BrokerMessage] =
-    get("default").read(topic, from, until)
 }

@@ -43,9 +43,10 @@ import scala.jdk.CollectionConverters._
   * Schema: `topic string, payload binary, received_time timestamp` —
   * the reference's `Message` struct (`pump_pipe.go:15-19`).
   *
-  * The in-memory broker serves local/test mode (single JVM). A production
-  * deployment swaps the [[MessageBroker]] seam for a network MQTT client
-  * per partition; the offset/partition plumbing here is unchanged.
+  * The source reads a [[MemoryBroker]] by name, which an [[MqttBridge]]
+  * feeds from the network (`graft.Main run`), or which the caller
+  * publishes into directly (tests). Brokers resolve per JVM, so `local[n]`
+  * is the supported mode.
   */
 class PumpMqttProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pump-mqtt"
@@ -54,6 +55,17 @@ class PumpMqttProvider extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
     new PumpMqttTable(new CaseInsensitiveStringMap(properties))
+}
+
+/** `mqtt-direct`: `pump-mqtt` over a private [[MqttBridge]] and broker, so
+  * one query subscribes a live broker with no other wiring. Options:
+  * `topics` and those of [[MqttBridge.start]] (`host`, `port`, ...).
+  */
+class MqttDirectProvider extends PumpMqttProvider {
+  override def shortName(): String = "mqtt-direct"
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: util.Map[String, String]): Table =
+    new PumpMqttTable(new CaseInsensitiveStringMap(properties), direct = true)
 }
 
 object PumpMqttSource {
@@ -112,57 +124,80 @@ object PumpMqttSource {
   }
 }
 
-class PumpMqttTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = s"pump-mqtt(${options.getOrDefault("topics", "")})"
+/** @param direct read a private bridge's broker (`mqtt-direct`), not `broker`'s */
+class PumpMqttTable(options: CaseInsensitiveStringMap, direct: Boolean = false)
+    extends Table with SupportsRead {
+  override def name(): String =
+    if (direct) s"mqtt-direct(${options.get("host")}:${options.get("port")})"
+    else s"pump-mqtt(${options.getOrDefault("topics", "")})"
   override def schema(): StructType = PumpMqttSource.Schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    () => new PumpMqttScan(
-      options.getOrDefault("broker", "default"),
-      PumpMqttSource.topicsOf(options),
-      PumpMqttSource.readLimitOf(options))
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = () => new Scan {
+    override def readSchema(): StructType = PumpMqttSource.Schema
+    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+      if (direct)
+        new PumpMqttMicroBatchStream(s"mqtt-direct-${java.util.UUID.randomUUID()}",
+          PumpMqttSource.topicsOf(options), bridge = Some(options))
+      else
+        new PumpMqttMicroBatchStream(options.getOrDefault("broker", "default"),
+          PumpMqttSource.topicsOf(options), PumpMqttSource.readLimitOf(options))
+  }
 }
 
-class PumpMqttScan(brokerName: String, topics: Seq[String],
-                   readLimit: ReadLimit) extends Scan {
-  override def readSchema(): StructType = PumpMqttSource.Schema
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new PumpMqttMicroBatchStream(brokerName, topics, readLimit)
-}
-
-/** Offset = per-topic message count, serialized as sorted-key JSON.
+/** Offset = per-topic message count in the log of one [[MemoryBroker]]
+  * incarnation, serialized as sorted-key JSON with the incarnation first
+  * under the key `#incarnation` (no MQTT topic name holds a `#`).
   * Backslashes are escaped BEFORE quotes (and unescaped in the reverse
   * order) so topic names containing `\` or `"` round-trip as valid JSON.
+  *
+  * An empty incarnation, as in JSON written before incarnations existed,
+  * means the live broker's log. Equality compares counts only: two
+  * offsets that Spark compares within one process life come from the
+  * same log.
   */
-case class TopicOffsets(counts: Map[String, Long]) extends Offset {
+final case class TopicOffsets(counts: Map[String, Long], incarnation: String = "") extends Offset {
   override def json(): String =
-    counts.toSeq.sortBy(_._1)
-      .map { case (t, n) =>
+    (Option.when(incarnation.nonEmpty)(s""""#incarnation":"$incarnation"""") ++
+      counts.toSeq.sortBy(_._1).map { case (t, n) =>
         val esc = t.replace("\\", "\\\\").replace("\"", "\\\"")
         s""""$esc":$n"""
-      }
+      })
       .mkString("{", ",", "}")
+
+  override def equals(other: Any): Boolean = other match {
+    case o: TopicOffsets => counts == o.counts
+    case _ => super.equals(other)
+  }
+  override def hashCode(): Int = counts.hashCode()
 }
 
 object TopicOffsets {
   private val Entry = """"((?:[^"\\]|\\.)*)":(\d+)""".r
+  private val Incarnation = """^\{"#incarnation":"([^"]*)"""".r.unanchored
   def fromJson(s: String): TopicOffsets =
     TopicOffsets(Entry.findAllMatchIn(s)
       .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-        -> m.group(2).toLong).toMap)
+        -> m.group(2).toLong).toMap,
+      s match { case Incarnation(id) => id; case _ => "" })
 }
 
 /** @param readLimit the default admission control
   *   ([[PumpMqttSource.readLimitOf]]): `ReadLimit.maxRows` caps a batch,
   *   `ReadLimit.minRows` holds one back until enough messages are pending
   *   or its delay has passed; a composite of the two applies both.
+  * @param bridge `mqtt-direct`'s options: when set, the stream subscribes
+  *   `topics` into `brokerName` through its own [[MqttBridge]], which it
+  *   closes on stop.
   */
 class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
-                               readLimit: ReadLimit = ReadLimit.allAvailable())
+                               readLimit: ReadLimit = ReadLimit.allAvailable(),
+                               bridge: Option[CaseInsensitiveStringMap] = None)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
+  // started first: a failed connect then leaves no broker or reader behind
+  private val subscription = bridge.map(MqttBridge.start(_, topics, brokerName))
   private val broker: MemoryBroker = MemoryBroker.get(brokerName)
   // pins the broker's logs until this stream commits past them or stops
   private val reader = broker.register(topics)
@@ -189,11 +224,25 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
   private def currentEnd: Map[String, Long] =
     availableNowEnd.getOrElse(resolvedTopics.map(t => t -> broker.endOffset(t)).toMap)
 
+  /** The restart rule. Offsets from another broker incarnation (a
+    * checkpoint written before this process started, or before the broker
+    * was released) index a log that is gone: QoS 0 never re-sends it. As a
+    * start such an offset means the live log's retained start, so what the
+    * bridge delivered before the restore is read; as an end it plans
+    * nothing, so a replayed pre-restart batch drains empty; and committing
+    * it never trims. An offset without an incarnation means the live log.
+    */
+  private def isLive(o: TopicOffsets): Boolean =
+    o.incarnation.isEmpty || o.incarnation == broker.incarnation
+
+  private def startOf(o: TopicOffsets, topics: Iterable[String]): Map[String, Long] =
+    if (isLive(o)) o.counts else topics.map(t => t -> broker.startOffset(t)).toMap
+
   /** With no checkpoint, start at the earliest message still retained. */
   override def initialOffset(): Offset =
-    TopicOffsets(resolvedTopics.map(t => t -> broker.startOffset(t)).toMap)
+    TopicOffsets(resolvedTopics.map(t => t -> broker.startOffset(t)).toMap, broker.incarnation)
 
-  override def latestOffset(): Offset = TopicOffsets(currentEnd)
+  override def latestOffset(): Offset = TopicOffsets(currentEnd, broker.incarnation)
 
   override def getDefaultReadLimit: ReadLimit = readLimit
 
@@ -217,8 +266,8 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
     * split across topics by [[PumpMqttSource.fairShare]].
     */
   override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
-    val start = startOffset.asInstanceOf[TopicOffsets].counts
     val end = currentEnd
+    val start = startOf(startOffset.asInstanceOf[TopicOffsets], end.keys)
     val limits = limitsOf(limit)
     val pending = end.map { case (t, e) => t -> math.max(0L, e - start.getOrElse(t, 0L)) }
     val minRows = limits.collectFirst { case m: ReadMinRows if availableNowEnd.isEmpty => m }
@@ -230,8 +279,9 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
       limits.collect { case m: ReadMaxRows => m.maxRows() }.reduceOption(_ min _) match {
         case Some(max) =>
           val take = PumpMqttSource.fairShare(pending, max)
-          TopicOffsets(start ++ end.keys.map(t => t -> (start.getOrElse(t, 0L) + take.getOrElse(t, 0L))))
-        case None => TopicOffsets(end)
+          TopicOffsets(start ++ end.keys.map(t => t -> (start.getOrElse(t, 0L) + take.getOrElse(t, 0L))),
+            broker.incarnation)
+        case None => TopicOffsets(end, broker.incarnation)
       }
     }
   }
@@ -239,8 +289,9 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
   override def deserializeOffset(json: String): Offset = TopicOffsets.fromJson(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[TopicOffsets].counts
-    val e = end.asInstanceOf[TopicOffsets].counts
+    val endOffsets = end.asInstanceOf[TopicOffsets]
+    val e = if (isLive(endOffsets)) endOffsets.counts else Map.empty[String, Long]
+    val s = startOf(start.asInstanceOf[TopicOffsets], e.keys)
     // one partition per (concrete) topic group — the reference's per-pipe
     // parallelism (S2); the end offset's key set carries the wildcard
     // expansion, so planning needs no re-resolution
@@ -253,9 +304,11 @@ class PumpMqttMicroBatchStream(brokerName: String, topics: Seq[String],
   override def createReaderFactory(): PartitionReaderFactory =
     new PumpMqttReaderFactory
 
-  override def commit(end: Offset): Unit =
-    reader.commit(end.asInstanceOf[TopicOffsets].counts)
-  override def stop(): Unit = reader.close()
+  override def commit(end: Offset): Unit = {
+    val o = end.asInstanceOf[TopicOffsets]
+    if (isLive(o)) reader.commit(o.counts)
+  }
+  override def stop(): Unit = { reader.close(); subscription.foreach(_.close()) }
 }
 
 case class PumpMqttPartition(brokerName: String, topic: String, from: Long, until: Long)

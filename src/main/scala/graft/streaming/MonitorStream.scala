@@ -131,11 +131,10 @@ object MonitorStream {
     * at-least-once under task retries (a retried partition re-publishes
     * its rows — acceptable for idempotent metrics documents). The
     * default publisher resolves [[MemoryBroker]] by name, which is
-    * per-JVM: correct on `local[n]` (the only mode this sandbox runs);
-    * on a real cluster pass `publisherFactory` building a NETWORK client
-    * per partition (e.g. the tcp:// client behind
-    * [[graft.sources.MqttDirectSource]]) — the factory is invoked on the
-    * executor, once per partition.
+    * per-JVM, as the `pump-mqtt` source it reads is: `local[n]` is the
+    * supported mode. `publisherFactory` replaces it, e.g. with a
+    * [[graft.sources.mqtt.MqttClient]] publishing to a network broker; the
+    * factory is invoked on the executor, once per partition.
     */
   def start(spark: SparkSession, cfg: PumpConfig, brokerName: String,
             checkpoint: String, trigger: Trigger = null,

@@ -37,14 +37,35 @@ object MqttCodecPropertySpec extends Properties("MqttCodec") {
         pkt.packetType == ptype && java.util.Arrays.equals(pkt.payload, payload)
     }
 
+  private val countsGen = Gen.mapOf(Gen.zip(
+    Gen.oneOf(Gen.alphaNumStr.suchThat(_.nonEmpty),
+      Gen.const("""weird"topic"""), Gen.const("pump/data/0"),
+      Gen.const("""back\slash"""), Gen.const("""trailing\"""),
+      Gen.const("""mix\"both\\""")),
+    Gen.choose(0L, Long.MaxValue)))
+  // "" is an offset without an incarnation
+  private val incarnationGen = Gen.oneOf(Gen.const(""), Gen.uuid.map(_.toString))
+
   property("TopicOffsets JSON round-trips, including quoted/backslashed topic names") =
-    forAll(Gen.mapOf(Gen.zip(
-      Gen.oneOf(Gen.alphaNumStr.suchThat(_.nonEmpty),
-        Gen.const("""weird"topic"""), Gen.const("pump/data/0"),
-        Gen.const("""back\slash"""), Gen.const("""trailing\"""),
-        Gen.const("""mix\"both\\""")),
-      Gen.choose(0L, Long.MaxValue)))) { m =>
-      TopicOffsets.fromJson(TopicOffsets(m).json()).counts == m
+    forAll(countsGen, incarnationGen) { (m, id) =>
+      val back = TopicOffsets.fromJson(TopicOffsets(m, id).json())
+      back.counts == m && back.incarnation == id
+    }
+
+  property("TopicOffsets counts and equality exclude the incarnation") =
+    forAll(countsGen, Gen.uuid.map(_.toString)) { (m, id) =>
+      val o = TopicOffsets.fromJson(TopicOffsets(m, id).json())
+      o.counts == m && o == TopicOffsets(m) && o.hashCode == TopicOffsets(m).hashCode
+    }
+
+  property("TopicOffsets JSON written without an incarnation parses as before") =
+    forAll(countsGen) { m =>
+      // the entries alone, as checkpoints hold them from before incarnations
+      val legacy = m.toSeq.sortBy(_._1).map { case (t, n) =>
+        s""""${t.replace("\\", "\\\\").replace("\"", "\\\"")}":$n"""
+      }.mkString("{", ",", "}")
+      val o = TopicOffsets.fromJson(legacy)
+      o.counts == m && o.incarnation == "" && TopicOffsets(m).json() == legacy
     }
 
   private val levelGen = Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString.take(5))

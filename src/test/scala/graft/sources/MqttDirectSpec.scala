@@ -2,12 +2,15 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.sources.mqtt.{MqttClient, MqttMiniServer}
 import org.apache.spark.sql.streaming.Trigger
 
-/** The tcp:// direct DSv2 source end-to-end against the mini MQTT server:
-  * live subscribe, micro-batch drains, per-topic partitions.
+/** `mqtt-direct` (`pump-mqtt` over a private bridge) end-to-end against
+  * the mini MQTT server: live subscribe, micro-batch drains, per-topic
+  * partitions, auto-reconnect, TLS, and a clean stop.
   */
 class MqttDirectSpec extends SparkSpec {
 
@@ -107,36 +110,6 @@ class MqttDirectSpec extends SparkSpec {
         assert(rows.exists(_.startsWith("after")))
       } finally q.stop()
     } finally server.close()
-  }
-
-  test("delivery buffer: commit trims the delivered prefix (bounded driver memory)") {
-    val b = new DeliveryBuffer
-    def msg(i: Int) = BrokerMessage("t", Array[Byte](i.toByte), i.toLong)
-    (0 until 10).foreach(i => b.append(msg(i)))
-    assert(b.end === 10)
-    assert(b.slice(0, 4).map(_.receivedTimeMicros).toSeq === Seq(0L, 1L, 2L, 3L))
-    b.trimTo(4) // batch [0,4) committed: prefix physically dropped...
-    assert(b.end === 10) // ...but absolute offsets keep counting
-    assert(b.slice(4, 10).map(_.receivedTimeMicros).toSeq === (4L until 10L))
-    assert(b.slice(0, 10).map(_.receivedTimeMicros).toSeq === (4L until 10L)) // clamped, no wrap
-    b.trimTo(2) // stale commit: never un-trims
-    assert(b.slice(4, 10).length === 6)
-  }
-
-  test("delivery buffer: restored offset from a previous life rebases, not mislabels") {
-    val b = new DeliveryBuffer
-    // restart: checkpoint says 100 messages were consumed pre-restart;
-    // this buffer is fresh. QoS 0 cannot replay them.
-    b.rebaseTo(100)
-    assert(b.end === 100)
-    assert(b.slice(90, 100).isEmpty) // replayed last batch drains empty
-    // fresh deliveries take offsets >= 100 instead of masquerading as 0..N
-    b.append(BrokerMessage("t", Array[Byte](1), 1L))
-    b.append(BrokerMessage("t", Array[Byte](2), 2L))
-    assert(b.end === 102)
-    assert(b.slice(100, 102).map(_.receivedTimeMicros).toSeq === Seq(1L, 2L))
-    b.rebaseTo(50) // steady-state deserialize of an old offset: no-op
-    assert(b.end === 102)
   }
 
   test("broker auth: wrong credentials refused with CONNACK rc=4, right ones accepted") {
@@ -268,15 +241,31 @@ class MqttDirectSpec extends SparkSpec {
     } finally ss.close()
   }
 
-  test("delivery buffer: rebase keeps fresh deliveries buffered before restore") {
-    val b = new DeliveryBuffer
-    // the reconnected client delivered 3 messages BEFORE the checkpointed
-    // offset was restored — they are fresh (this process life), not the
-    // unrecoverable pre-restart ones, and must not be dropped
-    (1 to 3).foreach(i => b.append(BrokerMessage("t", Array[Byte](i.toByte), i.toLong)))
-    b.rebaseTo(100)
-    assert(b.end === 103) // relabeled to offsets 100..102, not cleared
-    assert(b.slice(97, 100).isEmpty) // replayed pre-restart span still empty
-    assert(b.slice(100, 103).map(_.receivedTimeMicros).toSeq === Seq(1L, 2L, 3L))
+  test("a stopped mqtt-direct query leaves no connection or reconnect thread alive") {
+    def live(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet.filter(t =>
+      t.isAlive && Seq("mqtt-conn-", "mqtt-reconnect-").exists(t.getName.startsWith))
+    val server = new MqttMiniServer()
+    try {
+      val before = live()
+      val q = spark.readStream.format("mqtt-direct")
+        .option("host", "127.0.0.1")
+        .option("port", server.port.toString)
+        .option("topics", "pump/data/0")
+        .load()
+        .writeStream.format("memory").queryName("direct_threads_sink")
+        .trigger(Trigger.ProcessingTime("250 milliseconds")).start()
+      try {
+        val initDeadline = System.currentTimeMillis() + 30000
+        while (q.lastProgress == null && System.currentTimeMillis() < initDeadline)
+          Thread.sleep(100)
+        assert(q.lastProgress != null, "stream never initialized")
+        assert((live() -- before).size === 2) // the broker's connection and the supervisor
+      } finally q.stop()
+      // the server stays up: a thread it still runs is a connection the
+      // stopped query left open
+      val deadline = System.currentTimeMillis() + 3000
+      while ((live() -- before).nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert((live() -- before).map(_.getName) === Set.empty[String])
+    } finally server.close()
   }
 }

@@ -9,11 +9,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** The full reference modality composed end to end — live tcp:// MQTT
-  * direct source (auto-reconnect supervisor) → [[Pump.writeBatch]]
-  * dual sink (raw + adapter) → [[CurateStream.applyBatch]] over the
-  * adapter output — with a broker KILL + RESTART mid-stream. Each
-  * piece proved its own contract in isolation (MqttDirectSpec,
+/** The full reference modality composed end to end — the live tcp://
+  * `mqtt-direct` source (`pump-mqtt` over a private bridge, whose
+  * supervisor reconnects) → [[Pump.writeBatch]] dual sink (raw +
+  * adapter) → [[CurateStream.applyBatch]] over the adapter output — with
+  * a broker KILL + RESTART mid-stream. Each piece proved its own contract
+  * in isolation (MqttDirectSpec, MqttBridgeSpec, PumpRestartSpec,
   * PumpStreamingSpec, CurateStreamSpec); this spec proves they
   * COMPOSE: the curation ledger stays exactly-once (one verdict per
   * document, ever) across the reconnect, and near-dup state written
@@ -156,7 +157,7 @@ class FullModalitySoakSpec extends SparkSpec {
         // final reads (observed: adapter 21-25 vs ledger snapshot 5).
         // The barrier therefore also requires the stream itself to be
         // IDLE: the most recent completed trigger saw ZERO input rows.
-        // The delivery buffer only drains via triggers, so a 0-row
+        // The broker log only drains via triggers, so a 0-row
         // trigger after publishing stopped means nothing is queued,
         // and value stability across two such observations is sound.
         def adapterCount(): Long =

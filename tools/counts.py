@@ -6,6 +6,9 @@ the numbers quoted in README/round docs — regenerate, don't hand-edit).
   verify dump if one is given, else statically from the query maps.
 - ScalaTest tests: static count of test(...) registrations (every spec
   in this repo registers tests statically).
+- main-source size: non-blank lines of src/main/scala per package (the
+  files directly in each directory), and the DataSourceV2 providers
+  registered in META-INF/services.
 
 Usage: python3 tools/counts.py [verifyOutDir]
 """
@@ -45,8 +48,34 @@ def test_count():
     return n_tests, n_specs
 
 
+def package_lines():
+    main = os.path.join(ROOT, "src/main/scala")
+    lines = {}
+    for d, _, files in os.walk(main):
+        n = sum(sum(1 for l in open(os.path.join(d, f)) if l.strip())
+                for f in files if f.endswith(".scala"))
+        if n:
+            lines[os.path.relpath(d, main).replace(os.sep, ".")] = n
+    return dict(sorted(lines.items()))
+
+
+def providers():
+    services = os.path.join(ROOT, "src/main/resources/META-INF/services")
+    if not os.path.isdir(services):
+        return []
+    return [l.strip() for f in sorted(os.listdir(services))
+            for l in open(os.path.join(services, f))
+            if l.strip() and not l.startswith("#")]
+
+
 if __name__ == "__main__":
     q, src = query_count()
     t, s = test_count()
     print(f"oracle queries: {q} (from {src})")
     print(f"scalatest tests: {t} across {s} spec files (static count)")
+    lines = package_lines()
+    print(f"non-blank lines under src/main/scala: {sum(lines.values())}")
+    for pkg, n in lines.items():
+        print(f"  {pkg}: {n}")
+    ps = providers()
+    print(f"registered providers: {len(ps)} ({', '.join(ps)})")
